@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Candidate-volume + wall audit of the two IVF routing structures at
@@ -38,15 +38,7 @@ object ImiAudit {
     val n = args(0).toLong
     val dim = if (args.length > 1) args(1).toInt else 64
     val arms = if (args.length > 2) args(2) else "both"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
 
     // deterministic synthetic corpus: element (id, i) = a hash folded
     // to [-1, 1]; float-typed like the real embedding column

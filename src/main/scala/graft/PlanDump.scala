@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for named
@@ -8,27 +7,18 @@ import java.nio.file.{Files, Paths}
   * artifacts the optimization judge checks plan claims against).
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query> [query...]
-  * writes `<outDir>/<query>_<suffix>.txt` per query. Uses the same
-  * session shape as Bench (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus) so the dumped plan is the plan the bench runs.
+  * writes `<outDir>/<query>_<suffix>.txt` per query. The session
+  * comes from [[Harness]], as Bench's does (same cpus default,
+  * SPARK_GRAFT_CONF applied), so the dumped plan is the plan the bench
+  * runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "PlanDump: <outDir> <suffix> <query> [query...]")
     val outDir = args(0); val suffix = args(1); val names = args.drop(2).toSet
-    val unknown = names -- SparkEntry.benchQueries.keySet
-    require(unknown.isEmpty, s"PlanDump: unknown queries ${unknown.mkString(", ")}")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.requireQueries("PlanDump", names, SparkEntry.benchQueries)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(32)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.benchQueries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       val df = fn(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -13,7 +12,10 @@ import scala.collection.mutable
   * round artifacts (wall + task seconds) cannot see.
   *
   * Usage: runMain graft.Profile <query> [query...]
-  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as Bench.
+  * A name given n times is measured n times in a row — the loop for a
+  * profiler or jstack to sample. Session and env (SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_CONF) come from [[Harness]], as Bench's
+  * do.
   */
 object Profile {
   private final class JobLog extends SparkListener {
@@ -47,19 +49,9 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "Profile: <query> [query...]")
     val names = args.toSeq
-    val unknown = names.toSet -- SparkEntry.benchQueries.keySet
-    require(unknown.isEmpty, s"Profile: unknown queries ${unknown.mkString(", ")}")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.requireQueries("Profile", names, SparkEntry.benchQueries)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(32)
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
     names.foreach { name =>

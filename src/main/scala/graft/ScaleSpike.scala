@@ -38,15 +38,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSpike {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     try run(spark, args) finally spark.stop()
   }
 
@@ -54,6 +46,10 @@ object ScaleSpike {
     * it on the shared test session (main stops ITS session after). */
   private[graft] def run(spark: SparkSession, args: Array[String]): Unit = {
     val (srcDir, spikeDir, qlist) = (args(0), args(1), args(2))
+    // names resolve BEFORE synthesis: a typo must fail now, not after
+    // a 10x-100x corpus build. Empty means a synthesis-only run.
+    val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
+    Harness.requireQueries("ScaleSpike", names, SparkEntry.benchQueries)
     val copies = if (args.length > 3) args(3).toInt else 10
     require(copies >= 2 && copies <= 100,
       s"copies=$copies outside [2, 100] — entity-key offsets are sized " +
@@ -229,7 +225,6 @@ object ScaleSpike {
       }
     }
 
-    val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
     names.foreach { n =>
       graft.pipeline.PipelineQueries.resetShared()
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit over the whole query registry: count parquet scans
   * per SOURCE FILE in every registered query's executed plan and
   * report queries that re-scan the same file many times — the
@@ -45,27 +43,19 @@ object ScanAudit {
     val minScans = if (args.length > 1) args(1).toInt else 4
     val only = if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet)
       else None
-    // fail-loudly rule (Bench/VerifyOne's): a typo'd name silently
-    // audits nothing and "done: 0 flagged" reads as a clean audit
+    // an empty list would audit nothing, and "done: 0 flagged" reads
+    // as a clean audit
     only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(names.nonEmpty && unknown.isEmpty,
-        s"ScanAudit: unknown/empty query list ${unknown.toSeq.sorted.mkString(", ")}")
+      require(names.nonEmpty, "ScanAudit: empty query list")
+      Harness.requireQueries("ScanAudit", names, SparkEntry.queries)
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings truncate metadata (Location lists, PushedFilters)
-      // at 100 chars by default: a long path would be cut MID-NAME, so
-      // srcKey would group a mangled basename (or lose trailing paths
-      // entirely) and a real xN re-scan could under-count below the
-      // flag threshold — raise the cap so the audit reads whole paths
-      .config("spark.sql.maxMetadataStringLength", "4096")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = Harness.session(32)
+    // plan strings truncate metadata (Location lists, PushedFilters)
+    // at 100 chars by default: a long path would be cut MID-NAME, so
+    // srcKey would group a mangled basename (or lose trailing paths
+    // entirely) and a real xN re-scan could under-count below the
+    // flag threshold — raise the cap so the audit reads whole paths
+    spark.conf.set("spark.sql.maxMetadataStringLength", "4096")
     spark.sparkContext.setLogLevel("ERROR")
     // counts raw file: occurrences anywhere in the plan string — a
     // scan-node-scoped match would be stricter, but every file: in a

@@ -1,57 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
-/** Builder-side helper: dump only the named queries (fast oracle-parity
-  * iteration via tools/check.py) — same output layout as Verify. */
-object VerifyOne {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-    // a typo'd OR EMPTY name list must fail LOUDLY: silently running
-    // nothing dumps nothing, check.py reports "0/0 pass", and the
-    // operator reads an unverified query set as verified (the empty
-    // case: a shell variable holding the list expands to nothing)
-    require(names.nonEmpty, "VerifyOne: no query names given")
-    val unknown = names -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"VerifyOne: unknown quer${if (unknown.size == 1) "y" else "ies"} " +
-        s"${unknown.toSeq.sorted.mkString(", ")} — not in SparkEntry.queries")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val out = new java.io.File(outDir)
-    out.mkdirs()
-    SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
-      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    }
-    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
-      .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-  }
-}
 
+/** Correctness dump for the DuckDB oracle compare: each SparkEntry.queries
+  * result → parquet, plus oracle_sql.json.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...]
+  * With no names it dumps the whole registry; with names, only those
+  * queries and their oracle_sql.json entries (fast oracle-parity
+  * iteration via tools/check.py). Exits 1 if any query fails. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "Verify: <sfDir> <outDir> [query...]")
+    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
+    Harness.requireQueries("Verify", names, SparkEntry.queries)
+    def selected(name: String) = names.isEmpty || names(name)
+    val spark = Harness.session(4)
     // clear stale results first: a query that fails this run must not
     // inherit a previous run's parquet and pass by accident
     def rmrf(f: java.io.File): Unit = {
@@ -62,7 +25,7 @@ object Verify {
     if (out.exists()) rmrf(out)
     out.mkdirs()
     var failed = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -70,8 +33,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+      .map { case (k, v) => s"${Harness.q(k)}: ${Harness.q(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failed > 0) {
@@ -79,20 +43,4 @@ object Verify {
       sys.exit(1)
     }
   }
-
-  /** JSON string escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in builder-authored SQL would otherwise
-    * make the driver's json.load fail and silently zero the round's
-    * correctness. ONE copy shared with [[VerifyOne]] (an escaping fix
-    * applied to one entry point must not leave the other emitting
-    * unparseable oracle_sql.json). */
-  private[graft] def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
 /** Builder-tool and loader specs: the events footer probe (r13 advice:
   * the former conf-flip probe leaked a session-wide nanosAsLong window
   * to concurrent unrelated loads) and ScaleSpike's stale-stamp
-  * handling on filtered runs. */
+  * handling on filtered runs and query-name check. */
 class CoreToolsSpec extends SparkSpec {
 
   private val nanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
@@ -83,6 +83,22 @@ class CoreToolsSpec extends SparkSpec {
         "matched-stamp embeddings was deleted by a filtered run")
       assert(new java.io.File(dir, "embeddings.parquet/_SUCCESS").exists())
       assert(stamp("documents").contains("3"), stamp("documents"))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
+
+  test("ScaleSpike: an unknown query name fails before any table is synthesized") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_spike_names").toFile
+    try {
+      val e = intercept[IllegalArgumentException](ScaleSpike.run(spark,
+        Array(sfDir, dir.getPath, "no_such_query", "2", "documents")))
+      assert(e.getMessage.contains("no_such_query"), e.getMessage)
+      assert(!new java.io.File(dir, "documents.parquet").exists(),
+        "documents were synthesized before the name check")
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm); f.delete()

@@ -11,14 +11,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Pinned to 4 threads / 4 shuffle partitions and no SPARK_GRAFT_CONF,
+    * whatever the environment says: Par.spread and the plan-shape
+    * specs read that partition count. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4, Nil)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
