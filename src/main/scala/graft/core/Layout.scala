@@ -29,27 +29,24 @@ object Layout {
     * repeated calls (e.g. a benchmark's warmup + timed pass) must not
     * re-pay the write. A fresh JVM has an empty in-memory catalog and
     * always rewrites, so stale on-disk leftovers are never trusted. */
-  private val bucketing =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val bucketed = new SessionMemo[Unit]()
 
   def ensureBucketed(df: => DataFrame, keyCol: String, buckets: Int, table: String)
                     (spark: SparkSession): Unit =
-    // computeIfAbsent, not bare check-then-act: two threads racing the
+    // one memo slot, not bare check-then-act: two threads racing the
     // same table (bucket_join and bucket_agg share lineitem_bkt) would
-    // both see tableExists=false and concurrently DROP/delete/create —
-    // the same once-per-JVM discipline as Indexes.ensure. The catalog
-    // check stays inside for the leaf-write case of a table dropped
-    // out-of-band; a thrown write caches nothing. Keyed by TABLE, not
-    // (session, table): spark.newSession() shares the catalog and the
-    // warehouse location, so per-session keys let two sessions run
-    // DROP/delete/create concurrently on the SAME path — the exact
-    // corruption race the map exists to close (r12 core review).
-    bucketing.computeIfAbsent(table,
-      _ => {
-        if (!spark.catalog.tableExists(table))
-          writeBucketed(df, keyCol, buckets, table)
-        java.lang.Boolean.TRUE
-      })
+    // both see tableExists=false and concurrently DROP/delete/create.
+    // The catalog check stays inside for the leaf-write case of a table
+    // dropped out-of-band; a thrown write caches nothing. JVM-scoped and
+    // keyed by TABLE, not (session, table): spark.newSession() shares
+    // the catalog and the warehouse location, so per-session keys let
+    // two sessions run DROP/delete/create concurrently on the SAME path
+    // — the exact corruption race the memo exists to close (r12 core
+    // review).
+    bucketed(None, table) {
+      if (!spark.catalog.tableExists(table))
+        writeBucketed(df, keyCol, buckets, table)
+    }
 
   /** Write as a bucketed+sorted catalog table: both sides of a future
     * equi-join bucketed by the same key into the same bucket count
@@ -116,42 +113,35 @@ object Layout {
   * on (session, source dir, name) so it runs once per JVM/session,
   * exactly like [[Layout.ensureBucketed]] for bucketed layouts. */
 object Indexes {
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val built = new SessionMemo[String]()
 
   /** Path of the `name` index over source `dir`, building it via
-    * `build(targetDir)` only on first request for this session. A
+    * `build(targetDir)` only on first request for this session
+    * (concurrent callers of the same index wait for the one build). A
     * failed build deletes its partial output and caches nothing, so
-    * the next request retries cleanly. (The build runs inside the
-    * map's per-bin lock — ensure-ONCE is the point; concurrent callers
-    * of the same index must wait for it, and index builds are rare
-    * ingest-time events, not a serving-path contention source.
-    * NO-NESTING INVARIANT, as with SnapshotQueries.once: a build that
-    * itself calls ensure() for another index can corrupt or deadlock
-    * the map — every current builder is a leaf write; keep it so.) */
+    * the next request retries cleanly. */
   def ensure(spark: SparkSession, dir: String, name: String)
             (build: String => Unit): String =
-    built.computeIfAbsent(
-      s"${org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)}|$dir|$name",
-      _ => {
-        val target = java.nio.file.Files.createTempDirectory(s"graft_idx_$name")
-        try { build(target.toString); target.toString }
-        catch { case e: Throwable =>
-          // clean through the SAME filesystem the builders write: a
-          // scheme-less path resolves against the Hadoop DEFAULT FS,
-          // so off-local the former java.nio walk cleaned an empty
-          // LOCAL twin and left the partial parquet orphaned forever
-          // (fresh random name per retry — the copyVersionDir
-          // FS-abstraction class). A cleanup failure is SUPPRESSED
-          // onto the build error, never replacing it.
-          try {
-            val tp = new org.apache.hadoop.fs.Path(target.toString)
-            val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(tp)) fs.delete(tp, true)
-            java.nio.file.Files.deleteIfExists(target)
-          } catch { case c: Throwable => e.addSuppressed(c) }
-          throw e
-        }
-      })
+    built(Some(spark), s"$dir|$name") {
+      val target = java.nio.file.Files.createTempDirectory(s"graft_idx_$name")
+      try { build(target.toString); target.toString }
+      catch { case e: Throwable =>
+        // clean through the SAME filesystem the builders write: a
+        // scheme-less path resolves against the Hadoop DEFAULT FS,
+        // so off-local the former java.nio walk cleaned an empty
+        // LOCAL twin and left the partial parquet orphaned forever
+        // (fresh random name per retry — the copyVersionDir
+        // FS-abstraction class). A cleanup failure is SUPPRESSED
+        // onto the build error, never replacing it.
+        try {
+          val tp = new org.apache.hadoop.fs.Path(target.toString)
+          val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (fs.exists(tp)) fs.delete(tp, true)
+          java.nio.file.Files.deleteIfExists(target)
+        } catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+      }
+    }
 }
 
 /** Snapshots (HBase admin snapshots / MultiTableSnapshotInputFormat):
@@ -179,7 +169,7 @@ object Snapshots {
     * keyCol cached them, AFTER the replacement commits — a stale
     * manifest would read deleted part-file paths. */
   private def evictManifests(base: String, version: Int): Unit =
-    manifests.keySet.removeIf(_.contains(s"|$base|$version|"))
+    manifests.evict(_.startsWith(s"$base|$version|"))
 
   def read(spark: SparkSession, base: String, version: Int): DataFrame =
     Layout.read(spark, path(base, version))
@@ -260,59 +250,45 @@ object Snapshots {
   // snapshot version is immutable, and recomputing the manifest —
   // a full thin-column scan + shuffle — on EVERY direct-scan call
   // charged the "pruned" read more IO than an unpruned one (the
-  // reference persists the manifest at snapshot-write time; this map
+  // reference persists the manifest at snapshot-write time; this memo
   // is the session-local stand-in)
-  private val manifests =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, Long, Long)]]()
-  // memo bound: each entry is #regions tuples (tiny), but a process
-  // cycling through unbounded distinct snapshots would still grow the
-  // map forever — past the cap the whole memo resets (it's a cache;
-  // the next call of each live key rebuilds its one manifest)
-  private val manifestCap = 256
+  private val manifests = new SessionMemo[Array[(String, Long, Long)]]()
 
   def scanDirect(spark: SparkSession, base: String, version: Int,
                  keyCol: String, lo: Long, hi: Long): DataFrame = {
     require(hi >= lo, s"bad range [$lo, $hi)")
-    val key = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark) +
-      s"|$base|$version|$keyCol"
-    if (manifests.size > manifestCap) manifests.clear()
-    def build() = manifests.computeIfAbsent(key, _ =>
+    val name = s"$base|$version|$keyCol"
+    def build() = manifests(Some(spark), name)(
       regionManifest(spark, base, version, keyCol)
         .select("file", "start_key", "end_key").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
     def pick(m: Array[(String, Long, Long)]) =
       m.filter { case (_, s0, e0) => s0 < hi && e0 >= lo }.map(_._1)
-    var manifest = build()
     // VALIDATE-ON-USE: eviction at the replacement sites covers every
     // in-process deterministic path, but a scan RACING a replacement
-    // can still publish a stale manifest after the eviction ran (the
-    // CHM reservation is invisible to removeIf), and an out-of-process
-    // rewrite evicts nothing. Every replacement writes fresh random
-    // part-file names, so staleness always shows as a missing file —
-    // #regions driver-side existence probes (the same metadata cost
-    // as the reference's getSplits), then one rebuild heals it.
-    // The probe walks the WHOLE manifest, not just the picked subset:
-    // a stale manifest can pick ZERO files (the rewrite moved data
-    // into a key range the old regions never covered) and a
-    // picked-only probe returned a wrong EMPTY result forever (r12
-    // core review).
-    if (manifest.nonEmpty) {
+    // can still publish a stale manifest after the eviction ran, and an
+    // out-of-process rewrite evicts nothing. Every replacement writes
+    // fresh random part-file names, so staleness always shows as a
+    // missing file — #regions driver-side existence probes (the same
+    // metadata cost as the reference's getSplits), then one rebuild
+    // heals it. The probe walks the WHOLE manifest, not just the picked
+    // subset: a stale manifest can pick ZERO files (the rewrite moved
+    // data into a key range the old regions never covered) and a
+    // picked-only probe returned a wrong EMPTY result forever (r12 core
+    // review). An EMPTY manifest has no file paths to probe, so it can
+    // never detect an out-of-process rewrite that filled the version
+    // (r13 review: a previously empty version returned a wrong empty
+    // result FOREVER) — empties are rebuilt on every call; the rebuild
+    // is a metadata-sized job on a genuinely empty version, and a
+    // filled version heals on its first read.
+    var manifest = build()
+    val stale = manifest.isEmpty || {
       val fs = new org.apache.hadoop.fs.Path(manifest.head._1)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!manifest.forall { case (f, _, _) =>
-          fs.exists(new org.apache.hadoop.fs.Path(f)) }) {
-        manifests.remove(key)
-        manifest = build()
-      }
-    } else {
-      // an EMPTY cached manifest has no file paths to probe, so the
-      // existence check above can never detect an out-of-process
-      // rewrite that filled the version (r13 review: a previously
-      // empty version returned a wrong empty result FOREVER). Don't
-      // trust the memo for empties — rebuild every call; the rebuild
-      // is a metadata-sized job on a genuinely empty version, and a
-      // filled version heals on its first read.
-      manifests.remove(key)
+      !manifest.forall { case (f, _, _) => fs.exists(new org.apache.hadoop.fs.Path(f)) }
+    }
+    if (stale) {
+      manifests.evict(_ == name)
       manifest = build()
     }
     val picked = pick(manifest)

@@ -28,23 +28,10 @@ object SnapshotQueries {
     * per input dir — the verified operator is the READ/JOIN over the
     * layout, and re-paying the ingest write on every (warmup + timed)
     * invocation times the wrong thing. Per-JVM, so a fresh process never
-    * trusts stale on-disk leftovers from an earlier run. */
-  private val prepared =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  /** NO-NESTING INVARIANT: `setup` runs INSIDE computeIfAbsent, which
-    * holds the map bin lock for the (multi-second) ingest — a setup
-    * that itself calls once() for another key throws
-    * IllegalStateException or deadlocks, and unrelated keys hashing to
-    * the same bin block behind it. Every current setup is a leaf
-    * (plain writes); keep it that way, or switch to the per-key-future
-    * shape (putIfAbsent of a lazy holder) before composing setups.
-    * The lock-held form is kept deliberately: it preserves
-    * throw-caches-nothing atomically, with no half-registered state. */
-  private def once(key: String)(setup: => Unit): Unit =
-    // computeIfAbsent, NOT add-then-run: a THROWN setup must cache
-    // nothing, or every later call in the JVM reads a missing/partial
-    // layout (the same failed-build discipline as Indexes.ensure)
-    prepared.computeIfAbsent(key, _ => { setup; java.lang.Boolean.TRUE })
+    * trusts stale on-disk leftovers from an earlier run. A THROWN
+    * setup caches nothing, or every later call in the JVM would read a
+    * missing/partial layout. */
+  private val once = new SessionMemo[Unit]()
 
   /** Per-region stats: regions = n equal key ranges (the split table)
     * — the total-order bucketing from analytics.Tools with a payload
@@ -62,7 +49,7 @@ object SnapshotQueries {
     * the ingest). */
   private def ensureSnapshots(s: SparkSession, d: String): String = {
     val base = tmp("graft_snapshots", d)
-    once(base) {
+    once(None, base) {
       val ev = Tables.load(s, d, "events")
         .select("event_id", "user_id", "event_type", "ts", "value")
       Snapshots.write(ev, "user_id", base, 1)
@@ -95,7 +82,7 @@ object SnapshotQueries {
     "export_snapshot" -> ((s, d) => {
       val base = ensureSnapshots(s, d)
       val exp = tmp("graft_snap_export", d)
-      once(exp)(Snapshots.exportSnapshot(base, 1, exp))
+      once(None, exp)(Snapshots.exportSnapshot(base, 1, exp))
       def digests(df: DataFrame) =
         graft.analytics.Tools.hashTable(df, "user_id", eventRowHash, 10L)
       graft.analytics.Tools.syncTable(
@@ -124,12 +111,9 @@ object SnapshotQueries {
     // spec asserts v3 equals v1 row-for-row and that a clone taken
     // from the snapshot is unaffected by the origin's rollback.
     "restore_snapshot" -> ((s, d) => {
-      // the shared fixture resolves OUTSIDE once(): its own once()
-      // would nest inside this one's bin lock (the no-nesting
-      // invariant above)
       val src = ensureSnapshots(s, d)
       val base = tmp("graft_snap_restore", d)
-      once(base) {
+      once(None, base) {
         // v1 is byte-equivalent to the shared fixture's v1 — a file
         // copy, not a second multi-second Spark ingest of the same
         // rows (the snapshot_clone pattern)
@@ -165,7 +149,7 @@ object SnapshotQueries {
     "snapshot_clone" -> ((s, d) => {
       val base = ensureSnapshots(s, d)
       val cloneBase = tmp("graft_snap_clone", d)
-      once(cloneBase) {
+      once(None, cloneBase) {
         Snapshots.exportSnapshot(base, 1, cloneBase)
         val mutated = Snapshots.read(s, cloneBase, 1)
           .withColumn("value",
@@ -220,7 +204,7 @@ object SnapshotQueries {
       // once(): every other layout write here is guarded — an
       // unguarded overwrite lets concurrent runs over the same sfDir
       // delete the directory under each other's reads
-      once(base) {
+      once(None, base) {
         Layout.writeSorted(
           kept.select("rowkey", "qualifier", "ts", "value", "event_id"),
           "rowkey", base)

@@ -89,40 +89,38 @@ object Tables {
     *
     * This memoizes the PLAN (the resolved DataFrame), never results:
     * every action against the returned DataFrame still scans parquet,
-    * so bench/oracle runs keep computing from the inputs. Eviction
-    * discipline (the r12 rule): the key carries the file's (or the
-    * directory head file's) modification time and length, so a
-    * regenerated corpus gets a fresh read plan — and dead sessions are
-    * swept so a service hosting many short-lived sessions doesn't
-    * retain them (the PipelineQueries.sweepDead pattern). Loader
-    * callers only ever read the driver-generated testdata tables,
-    * which are replaced wholesale between generations (never appended
-    * in place), so mtime+len is a sound generation stamp. */
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * so bench/oracle runs keep computing from the inputs. The stamp is
+    * the recursive listing's (file count, newest mtime, total length,
+    * file names) — generators replace a table wholesale with freshly
+    * named part files, so a regenerated corpus, flat or partitioned,
+    * gets a fresh read plan and supersedes the stale one. */
+  private[graft] val loads = new SessionMemo[DataFrame]()
 
-  private def pathStamp(spark: SparkSession, path: String): String = {
+  private def pathStamp(spark: SparkSession, sfDir: String, name: String,
+                        path: String): String = {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = fs.getFileStatus(p)
+    val st =
+      try fs.getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(
+          s"Tables.load: no table '$name' in sf dir '$sfDir' ($path does not exist)")
+      }
     if (st.isDirectory) {
-      val files = fs.listStatus(p).filter(_.isFile)
-      s"dir:${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
-        files.map(_.getLen).sum
+      // listStatus: the local FS's listFiles forks a process per file
+      def under(d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(d).toSeq.flatMap(f => if (f.isDirectory) under(f.getPath) else Seq(f))
+      val files = under(p)
+      s"dir:${files.size}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
+        s"${files.map(_.getLen).sum}:${files.map(_.getPath.toString).sorted.hashCode}"
     } else s"file:${st.getModificationTime}:${st.getLen}"
   }
 
-  private def sweepDeadLoads(): Unit =
-    readMemo.entrySet().removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    sweepDeadLoads()
     val path = s"$sfDir/$name.parquet"
-    val key = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark) +
-      s"|$path|" + pathStamp(spark, path)
-    readMemo.computeIfAbsent(key, _ => loadFresh(spark, sfDir, name))
+    loads(Some(spark), path, pathStamp(spark, sfDir, name, path))(
+      loadFresh(spark, sfDir, name))
   }
 
   private def loadFresh(spark: SparkSession, sfDir: String, name: String): DataFrame =

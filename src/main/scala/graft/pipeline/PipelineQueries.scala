@@ -34,90 +34,40 @@ object PipelineQueries {
     * join; memoize the pinned result per (session, dir) instead — the
     * single-JVM stand-in for the shingle/pair tables a corpus-scale
     * pipeline materializes once per snapshot and feeds to every
-    * consumer. Keyed by `sessionUUID` (stable, unique per session —
-    * identityHashCode can collide after GC) so checkpoints never leak
-    * across sessions (a localCheckpoint dies with its context). */
-  /** One memo slot: the BUILD (a distributed checkpoint job) runs
-    * under the holder's own monitor, NOT inside ConcurrentHashMap's
-    * bin lock — computeIfAbsent only constructs this cheap shell.
-    * Before r12 the full build ran inside computeIfAbsent, so a
-    * builder that touched another memoized table re-entered the map
-    * under a bin lock (IllegalStateException or deadlock — a hazard
-    * three call sites policed by comment alone), and unrelated keys
-    * sharing a hash bin stalled behind multi-second shingle builds.
-    * Same-key circularity still deadlocks — that is a genuine cycle.
-    * The session rides along so sweeps can drop never-forced holders
-    * of dead sessions without forcing a build on a stopped context. */
-  private final class MemoSlot(val session: SparkSession,
-                               build: () => DataFrame) {
-    private var built: Option[DataFrame] = None
-    def df: DataFrame = synchronized {
-      built.getOrElse { val d = build(); built = Some(d); d }
-    }
-    def peek: Option[DataFrame] = synchronized(built)
-  }
+    * consumer. Session-owned, so checkpoints never leak across
+    * sessions (a localCheckpoint dies with its context), and every
+    * dropped pin is freed — clearing entries alone strands the blocks
+    * in the block manager until driver GC notices (the r4 bench
+    * regression: a 100-query JVM accumulated every pinned table ever
+    * built). */
+  private[graft] val shared = new graft.core.SessionMemo[DataFrame](df =>
+    if (!df.sparkSession.sparkContext.isStopped)
+      org.apache.spark.sql.graftbridge.CheckpointBridge.free(df))
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, MemoSlot]()
   private def memoized(s: SparkSession, d: String, what: String)
-                      (build: => DataFrame): DataFrame = {
-    sweepDead()
-    memo.computeIfAbsent(s"${sessionKey(s)}|$d|$what",
-      _ => new MemoSlot(s, () => build.localCheckpoint())).df
-  }
-
-  /** Drop entries whose SparkContext has stopped: their checkpoint
-    * blocks died with the context, but the map entry would otherwise
-    * retain the dead session object for the JVM's life (a slow leak in
-    * a service hosting many short-lived sessions). */
-  private def sweepDead(): Unit =
-    memo.entrySet().removeIf(e => e.getValue.session.sparkContext.isStopped)
-
-  private def sessionKey(s: SparkSession): String =
-    org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(s)
+                      (build: => DataFrame): DataFrame =
+    memoizedPinned(s, d, what)(build.localCheckpoint())
 
   /** [[memoized]] for builders whose result is ALREADY pinned (e.g.
     * [[Dedup.connectedComponents]] returns its final checkpointed label
     * generation) — re-checkpointing would copy the blocks and orphan
     * the inner pin. */
   private def memoizedPinned(s: SparkSession, d: String, what: String)
-                            (build: => DataFrame): DataFrame = {
-    sweepDead()
-    memo.computeIfAbsent(s"${sessionKey(s)}|$d|$what",
-      _ => new MemoSlot(s, () => build)).df
-  }
+                            (build: => DataFrame): DataFrame =
+    shared(Some(s), s"$d|$what")(build)
 
-  /** Drop every memoized table, RELEASING its checkpoint blocks —
-    * clearing the map alone strands the blocks in the block manager
-    * until driver GC notices (the r4 bench regression: a 100-query JVM
-    * accumulated every pinned table ever built). Bench hygiene: the
+  /** Drop every memoized table, freeing the pins of the ones that were
+    * built (never forcing a build just to free it). Bench hygiene: the
     * timed pass must pay the first computation of each shared table
     * inside the timed window — charged to the explicit `memo_setup`
     * line via [[prewarmShared]] (r9; first-consumer attribution made
     * per-query numbers move with registration order) — not inherit it
     * from the warmup pass, otherwise the dedup family times a cache
-    * probe instead of the operator. */
-  def resetShared(): Unit = {
-    import org.apache.spark.sql.graftbridge.CheckpointBridge
-    // remove-then-free PER ENTRY, not free-all-then-clear: an entry
-    // inserted between the two bulk steps would be cleared without
-    // freeing its blocks (the r4 leak re-opened), and one dead-session
-    // entry throwing mid-loop would abort the rest unfreed. Callers
-    // must still not run this concurrently with an executing consumer
-    // (freeing pins under a running job is a use-after-free by
-    // definition) — Bench calls it between passes only.
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val slot = it.next().getValue
-      it.remove()
-      // free only FORCED slots (peek, never df): forcing a build here
-      // just to free it would run a checkpoint job on the reset path
-      slot.peek.foreach { df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          try CheckpointBridge.free(df)
-          catch { case _: Throwable => () } // best-effort hygiene
-      }
-    }
-  }
+    * probe instead of the operator. Callers must not run this
+    * concurrently with an executing consumer (freeing pins under a
+    * running job is a use-after-free by definition) — Bench calls it
+    * between passes only. */
+  def resetShared(): Unit = shared.clear()
 
   private def shingleTab(s: SparkSession, d: String): DataFrame =
     // Par.spread BEFORE the build (r17): the localCheckpoint pin
@@ -1240,12 +1190,14 @@ object PipelineQueries {
     // different sketch; the spec asserts the estimate lands within 5%
     // of exact NDV and that shard-merge ≡ whole-corpus sketch.
     "sketch_hll_shards" -> ((s, d) => {
-      // Par.spread: the HLL register updates over 600k keys ran on the
-      // flat file's ONE scan partition (measured: a 1.5 s single-task
-      // job); keys-only projection first so the thin shuffle moves
-      // 8-byte keys, then both sketch passes aggregate map-side 32-way
-      val li = graft.core.Par.spread(
-          Tables.load(s, d, "lineitem").select("l_orderkey"), "l_orderkey")
+      // no Par.spread: both sketch passes already combine map-side, and
+      // a keys-only spread in front of them added two Exchanges and made
+      // the query 2.4-2.9x slower at 32 and 8 cores (r17). The exact
+      // NDV is its own aggregate: next to a distinct count, the whole-
+      // corpus sketch would be planned per DISTINCT KEY (one sketch
+      // buffer per l_orderkey, sort-based fallback) instead of one
+      // buffer per task
+      val li = Tables.load(s, d, "lineitem").select("l_orderkey")
         .withColumn("shard", pmod(col("l_orderkey"), lit(8)))
       val shardSketches = li.groupBy("shard")
         .agg(expr("hll_sketch_agg(l_orderkey, 14)").as("sk"))
@@ -1253,9 +1205,9 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_shards"),
           expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_union"))
       val whole = li.agg(
-        expr("hll_sketch_estimate(hll_sketch_agg(l_orderkey, 14))").as("est_whole"),
-        countDistinct(col("l_orderkey")).as("exact_ndv"))
-      merged.crossJoin(whole)
+        expr("hll_sketch_estimate(hll_sketch_agg(l_orderkey, 14))").as("est_whole"))
+      val exact = li.agg(countDistinct(col("l_orderkey")).as("exact_ndv"))
+      merged.crossJoin(whole).crossJoin(exact)
         .select(col("n_shards"), col("est_union"), col("est_whole"),
           col("exact_ndv"))
     }),

@@ -287,16 +287,21 @@ object Ann {
     * job per materialization of every IVF/IMI/kmeans plan. Same
     * values, same sort order (sort_array on structs orders by the
     * leading `cell` field, which is unique — equal to the driver-side
-    * sortBy below), same element schema (built from the input's own
-    * fields). Non-local inputs (the trainIters = 0 lazy-seeded path)
-    * keep the aggregate form. */
-  private[sim] def centroidArray(cent: DataFrame): DataFrame = {
+    * sortBy below), same element schema (the input's own fields,
+    * picked by name). Non-local inputs (the trainIters = 0 lazy-seeded
+    * path) keep the aggregate form. */
+  private[graft] def centroidArray(cent: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
     if (cent.queryExecution.logical.isInstanceOf[LocalRelation]) {
-      val rows = cent.collect().sortBy(_.getInt(0))
+      // columns by NAME, in the agg form's order: a caller's table may
+      // order them any way (the projection stays driver-local)
+      val ordered = cent.select("cell", "c_emb", "c_norm")
+      val cellType = ordered.schema("cell").dataType
+      require(cellType == IntegerType, s"centroidArray needs an int 'cell' column; got $cellType")
+      val rows = ordered.collect().sortBy(_.getInt(0))
       val schema = StructType(Seq(StructField("cents",
-        ArrayType(StructType(cent.schema.fields), containsNull = false),
+        ArrayType(StructType(ordered.schema.fields), containsNull = false),
         nullable = false)))
       val row: org.apache.spark.sql.Row =
         org.apache.spark.sql.Row(rows.toSeq)

@@ -265,13 +265,9 @@ object StreamOps {
     *    readers keep serving the stale old maximum — every key not
     *    re-shipped since is then lost. Refuse loudly: resume from the
     *    original checkpoint, or point the new stream at a fresh path. */
-  // session-lifetime memo of verified (queryId, path) ownership — see
-  // the marker-probe note inside maintainGuard. Capped like the
-  // manifest memo: past the cap the whole set resets and each live
-  // stream's next batch re-reads its one marker.
-  private val ownershipVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val ownershipCap = 1024
+  // JVM-lifetime memo of verified (queryId, path) ownership — see the
+  // marker-probe note inside maintainGuard
+  private val ownershipVerified = new graft.core.SessionMemo[Unit]()
 
   private[graft] def maintainGuard(spark: org.apache.spark.sql.SparkSession,
                                    path: String, batchId: Long)
@@ -300,8 +296,7 @@ object StreamOps {
     // per-batch round-trips (r12 streaming review). The memo only
     // skips the MARKER probe; the per-batch version arithmetic below
     // still runs on every call.
-    val memoKey = curId.map(id => s"$id|$path")
-    if (!memoKey.exists(ownershipVerified.contains)) {
+    def verifyOwner(): Unit = {
       val ownerId: Option[String] =
         if (!fs.exists(marker)) None
         else {
@@ -334,11 +329,8 @@ object StreamOps {
         val out = fs.create(marker, true)
         try out.write(id.getBytes("UTF-8")) finally out.close()
       }
-      memoKey.foreach { k =>
-        if (ownershipVerified.size > ownershipCap) ownershipVerified.clear()
-        ownershipVerified.add(k)
-      }
     }
+    curId.fold(verifyOwner())(id => ownershipVerified(None, s"$id|$path")(verifyOwner()))
     require(versions.forall(_ <= batchId),
       s"maintained table at $path holds version ${versions.max} from a " +
         s"previous stream but this checkpoint is at batch $batchId — " +

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.functions._
 import graft.sim.{Ann, CodebookTopK, VecDot, VectorOps}
@@ -103,6 +104,31 @@ class CodebookTopKSpec extends SparkSpec {
       .select(expr("transform(_t, x -> x.cell)"))
       .collect().head.getSeq[Int](0)
     assert(top == Seq(3, 7, 1), s"tie order: $top")
+  }
+
+  test("centroidArray: a driver-local table in any column order matches the aggregate form") {
+    import org.apache.spark.sql.types._
+    val cent = spark.createDataFrame(java.util.Arrays.asList(
+        Row(Seq(0.0, 1.0), 1.0, 5), Row(Seq(1.0, 0.0), 1.0, 2), Row(Seq(0.6, 0.8), 1.0, 9)),
+      StructType(Seq(StructField("c_emb", ArrayType(DoubleType)),
+        StructField("c_norm", DoubleType), StructField("cell", IntegerType))))
+    assert(cent.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    // a Filter over the relation is not driver-local: the aggregate form
+    val viaAgg = Ann.centroidArray(cent.where(lit(true))).collect().head
+    // the reordering projection stays driver-local: no job
+    val sc = spark.sparkContext
+    sc.setJobGroup("centroid_array_local", "centroidArray fast path", false)
+    val local = try Ann.centroidArray(cent) finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("centroid_array_local").isEmpty)
+    val viaLocal = local.collect().head
+    assert(viaLocal.getSeq[Row](0).map(_.getInt(0)) == Seq(2, 5, 9))
+    assert(viaLocal == viaAgg, s"$viaLocal vs $viaAgg")
+    val longCell = spark.createDataFrame(
+      cent.collect().toSeq.map(r => Row(r(0), r(1), r.getInt(2).toLong)).asJava,
+      StructType(cent.schema.fields.init :+ StructField("cell", LongType)))
+    val e = intercept[IllegalArgumentException](Ann.centroidArray(longCell))
+    assert(e.getMessage.contains("int 'cell'"), e.getMessage)
   }
 
   test("codebook_topk is conspicuously NULL on a malformed codebook") {

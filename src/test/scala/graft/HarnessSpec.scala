@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The tool harness: the query-name guard every main runs, the
-  * SPARK_GRAFT_CONF parser, and the one-config-site rule. */
+  * SPARK_GRAFT_CONF parser, and the one-site rules (session config,
+  * memo map). */
 class HarnessSpec extends SparkSpec {
 
   private val registries = Seq(
@@ -43,9 +44,18 @@ class HarnessSpec extends SparkSpec {
       Seq("a" -> "1", "b" -> "x=y=", "c" -> ""))
   }
 
-  test("one config site: only Harness.scala builds a SparkSession") {
-    val needle = "SparkSession" + ".builder"
-    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+  /** One-site rules: (test name, needle, the one file allowed to hold
+    * it, the roots scanned). Needles are split so this file never
+    * matches itself. */
+  private val oneSite = Seq(
+    ("one config site: only Harness.scala builds a SparkSession",
+      "SparkSession" + ".builder", "Harness.scala",
+      Seq("src/main/scala", "src/test/scala")),
+    ("one memo site: only SessionMemo.scala holds a concurrent map",
+      "Concurrent" + "HashMap", "SessionMemo.scala", Seq("src/main/scala")))
+
+  for ((name, needle, allowed, rootNames) <- oneSite) test(name) {
+    val roots = rootNames.map(Paths.get(_))
     roots.foreach(r => assert(Files.isDirectory(r), s"$r missing (cwd " +
       s"${Paths.get("").toAbsolutePath})"))
     val scala = roots.flatMap { r =>
@@ -53,9 +63,9 @@ class HarnessSpec extends SparkSpec {
       try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
-    val builders = scala.filter(p => Files.readString(p).contains(needle))
+    val holders = scala.filter(p => Files.readString(p).contains(needle))
       .map((p: Path) => p.getFileName.toString)
-    assert(builders == Seq("Harness.scala"), builders)
+    assert(holders == Seq(allowed), holders)
   }
 
   test("the shared test session carries the harness settings") {

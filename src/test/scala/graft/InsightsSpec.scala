@@ -343,6 +343,15 @@ class InsightsSpec extends SparkSpec {
   }
 
   test("sketch_hll_shards: estimates land within 5% of exact; sharding is lossless-ish") {
+    // both sketch passes combine map-side: no repartition of the keys in
+    // front of them (the countDistinct's own l_orderkey exchange stays),
+    // and no sketch buffer per distinct key
+    val plan = q("sketch_hll_shards").queryExecution.executedPlan.toString()
+    assert(!plan.linesIterator.exists(l =>
+        l.contains("Exchange hashpartitioning(l_orderkey") &&
+          l.contains("REPARTITION_BY_NUM")), plan)
+    assert(!plan.linesIterator.exists(l =>
+        l.contains("keys=[l_orderkey") && l.contains("hll_sketch_agg")), plan)
     val r = q("sketch_hll_shards").collect().head
     val exact = r.getAs[Long]("exact_ndv").toDouble
     assert(r.getAs[Long]("n_shards") == 8L)
